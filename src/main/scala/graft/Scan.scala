@@ -5,6 +5,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.config.ScanConfig
@@ -29,7 +30,10 @@ final case class TableScanResult(
   *
   * Pipeline per table: fast row count → all-string read → row cap
   * (sample/head) → type promotion → optional date shift → column
-  * exclusion → profile + frequency. Unlike the reference's sequential
+  * exclusion → profile + frequency. With a row cap the file is parsed
+  * once, for the sample, which [[Sampling.cap]] materializes: every
+  * later pass reads the at most maxRows pinned rows, released when
+  * the table's report is built. Unlike the reference's sequential
   * per-file loop (whiteRRabbit.R:450-464), folders are scanned with the
   * per-file Spark jobs submitted concurrently from driver threads —
   * files share the cluster instead of queueing behind each other.
@@ -62,6 +66,20 @@ object Scan {
     // only widens the sampling margin — the survivor check stays exact
     val capped = Sampling.cap(df0, config.maxRows, config.randomSample,
       config.seed, totalRows = Some(totalRows))
+    // a capped sample is pinned (Sampling.cap); both report sheets are
+    // local relations by the time profileTable returns, so nothing
+    // reads the pin afterwards. An uncapped `capped` IS the caller's
+    // df0, whose pins are not ours to release.
+    try profileTable(spark, capped, name, totalRows, nFields, config)
+    finally if (capped ne df0) ColumnBridge.release(capped)
+  }
+
+  /** Type promotion → optional date shift → column exclusion →
+    * profile + frequency, over the (capped) rows of one table.
+    */
+  private def profileTable(spark: SparkSession, capped: DataFrame,
+      name: String, totalRows: Long, nFields: Int,
+      config: ScanConfig): TableScanResult = {
     val (promoted, inference) = TypeInference.inferAndPromote(
       capped, threshold = 0.8, seed = config.seed,
       randomSample = config.randomSample)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.functions.{BpeExpressions, TextFunctions}
@@ -146,27 +147,6 @@ object SparkEntry {
 
   private def roundedSummary(df: DataFrame): DataFrame =
     roundSummary(Profile.summarize(df))
-
-  /** Cache hygiene for queries that `localCheckpoint` an intermediate
-    * (ADVICE r18): checkpoint blocks pin at the RDD level, invisible
-    * to Dataset.unpersist, and would linger until ContextCleaner GC
-    * across bench reps. The query's RESULT is report-sized by
-    * construction for every caller, so materialize it here, release
-    * each pin (failure path too), and return a local relation —
-    * the Similarity.collectReleased pattern.
-    */
-  private def collectReleased(out: DataFrame,
-      pinned: DataFrame*): DataFrame = {
-    val rows =
-      try out.collect()
-      finally pinned.foreach { df =>
-        scala.util.Try(df.unpersist())
-        scala.util.Try(org.apache.spark.sql.graft.ColumnBridge
-          .unpersistCheckpointed(df))
-      }
-    import scala.jdk.CollectionConverters._
-    out.sparkSession.createDataFrame(rows.toSeq.asJava, out.schema)
-  }
 
   /** Self-verifying result for the scratch-backed table-layer
     * contracts: collect BOTH the layer's answer and the same answer
@@ -3201,7 +3181,7 @@ object SparkEntry {
         .inferAndPromote(widened(stringified(tbl(s, dir, "orders"))))
         ._1.localCheckpoint(true)
       // summary = one row per column; released via collectReleased
-      collectReleased(roundedSummary(promoted), promoted)
+      ColumnBridge.collectReleased(roundedSummary(promoted), promoted)
     }),
     // op 4 — exact-k random sample (whiteRRabbit.R:225-272)
     "sample_exactk" -> ((s, dir) => sampleQuery(s, dir)),
@@ -5560,7 +5540,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("cross_split_pairs"))
       // per-split rollup = |dataSplits| rows; released via
       // collectReleased so the pairs checkpoint blocks don't linger
-      collectReleased(
+      ColumnBridge.collectReleased(
         assigned.groupBy("split")
           .agg(count(lit(1)).as("n_docs"),
             countDistinct(col("rep")).as("n_clusters"))

@@ -70,6 +70,27 @@ object Profile {
     case other                              => other.simpleString
   }
 
+  /** Widen a NARROW input to the session's parallelism before the
+    * profile's compute-heavy passes (optimization r19, guide §2.5
+    * "input skew — repartition immediately after the read"). A small
+    * parquet table is one-to-three row groups = as many unsplittable
+    * scan tasks however many cores the box has (the sf0.1 lineitem
+    * profile ran its sketch and melt passes in 3 tasks at 32 cores).
+    * The gate keeps this scale-neutral: a corpus-sized input already
+    * scans wider than the cluster and passes through untouched.
+    * Aggregation-only consumers make the round-robin order shift
+    * semantically invisible.
+    */
+  private[graft] def widened(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
+  // summarize (exact path) deliberately NOT widened: its heavy work
+  // (histogram melt) redistributes at its own exchange already, and
+  // the measured effect of a pre-repartition was a small REGRESSION
+  // on small tables (summary_orders 2.53→2.87, customer 2.62→3.37 —
+  // two extra full-row shuffles per profile) with lineitem flat.
   /** Profile every column of `df`.
     * Semantics per column (whiteRRabbit.R:313-327):
     *   missing  = count of NULLs;
@@ -93,27 +114,6 @@ object Profile {
     * distributed hash aggregation, no per-group value buffering
     * anywhere in the exact path.
     */
-  /** Widen a NARROW input to the session's parallelism before the
-    * profile's compute-heavy passes (optimization r19, guide §2.5
-    * "input skew — repartition immediately after the read"). A small
-    * parquet table is one-to-three row groups = as many unsplittable
-    * scan tasks however many cores the box has (the sf0.1 lineitem
-    * profile ran its sketch and melt passes in 3 tasks at 32 cores).
-    * The gate keeps this scale-neutral: a corpus-sized input already
-    * scans wider than the cluster and passes through untouched.
-    * Aggregation-only consumers make the round-robin order shift
-    * semantically invisible.
-    */
-  private[graft] def widened(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  // summarize (exact path) deliberately NOT widened: its heavy work
-  // (histogram melt) redistributes at its own exchange already, and
-  // the measured effect of a pre-repartition was a small REGRESSION
-  // on small tables (summary_orders 2.53→2.87, customer 2.62→3.37 —
-  // two extra full-row shuffles per profile) with lineitem flat.
   def summarize(
       df: DataFrame,
       exactQuantiles: Boolean = true,

@@ -280,6 +280,18 @@ object Sampling {
     * `totalRows` (the scan's already-computed line count) feeds
     * [[exactK]]'s pre-thin — the analogue of the reference's awk
     * line-number pre-filter, whiteRRabbit.R:229-236.
+    *
+    * With maxRows > 0 the capped rows are materialized ONCE, here, by
+    * an eager `localCheckpoint`: the source is parsed a single time
+    * for the sample, and every later pass (type-inference vote,
+    * promotion, date shift, profile, frequency) reads the at most
+    * maxRows pinned rows instead of re-parsing and re-thinning the
+    * whole file. The pin is bounded by maxRows by construction; an
+    * uncapped scan (maxRows <= 0) returns `df` untouched and pins
+    * nothing. The caller releases the pin once the rows are no longer
+    * read, with [[org.apache.spark.sql.graft.ColumnBridge.release]]
+    * (a localCheckpoint persists at the RDD level, which
+    * `Dataset.unpersist` alone does not see).
     */
   def cap(df: DataFrame, maxRows: Long, randomSample: Boolean,
       seed: Long = 42L, totalRows: Option[Long] = None): DataFrame =
@@ -287,7 +299,8 @@ object Sampling {
     else {
       require(maxRows <= Int.MaxValue,
         s"maxRows $maxRows exceeds Int.MaxValue; use maxRows <= 0 for all rows")
-      if (randomSample) exactK(df, maxRows.toInt, seed, totalRows)
-      else headK(df, maxRows.toInt)
+      val k = maxRows.toInt
+      (if (randomSample) exactK(df, k, seed, totalRows) else headK(df, k))
+        .localCheckpoint(true)
     }
 }

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -59,4 +59,28 @@ object ColumnBridge {
         }
       case _ => ()
     }
+
+  /** Release every pin a query took: its CacheManager entries
+    * (`Dataset.unpersist`) and its RDD-level checkpoints
+    * ([[unpersistCheckpointed]]). Best-effort per pin, so one failed
+    * release never masks the caller's own result or error.
+    */
+  def release(pinned: DataFrame*): Unit =
+    pinned.foreach { df =>
+      scala.util.Try(df.unpersist())
+      scala.util.Try(unpersistCheckpointed(df))
+    }
+
+  /** Cache hygiene for a query that pinned intermediates (cached or
+    * `localCheckpoint`ed) and whose result is report-sized by
+    * construction: collect the result, release each pin — on the
+    * failure path too — and return the rows as a local relation, so a
+    * long-lived session invoking the query many times never accrues
+    * its pins until LRU eviction or the ContextCleaner GC sweep.
+    */
+  def collectReleased(out: DataFrame, pinned: DataFrame*): DataFrame = {
+    val rows = try out.collect() finally release(pinned: _*)
+    out.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), out.schema)
+  }
 }

@@ -173,10 +173,7 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(count(p, "BroadcastHashJoin") +
         count(p, "BroadcastNestedLoopJoin") >= 2,
         s"graph search lost its broadcasts:\n${p.take(800)}")
-    } finally pinned.foreach { d =>
-      d.unpersist()
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpointed(d)
-    }
+    } finally org.apache.spark.sql.graft.ColumnBridge.release(pinned: _*)
   }
 
   test("knn_graph / knn_graph_incremental release every cache they " +

@@ -69,6 +69,24 @@ class SamplingDateShiftSpec extends AnyFunSuite {
     assert(Sampling.exactK(nums, 20000, 1L).count() == 10000)
   }
 
+  test("cap: an uncapped scan returns its input unchanged, a capped " +
+      "one materializes at most maxRows rows until released") {
+    def pinned(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.exists {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+        case _ => false
+      }
+    val big = spark.range(10000).select(col("id").cast("int").as("n"))
+    val uncapped = Sampling.cap(big, -1, randomSample = true)
+    assert((uncapped eq big) && !pinned(uncapped))
+    val capped = Sampling.cap(big, 100, randomSample = true,
+      totalRows = Some(10000L))
+    assert(pinned(capped) && capped.count() == 100)
+    org.apache.spark.sql.graft.ColumnBridge.release(capped)
+    assert(!pinned(capped))
+  }
+
   test("weighted sampling oversamples heavy rows, exact k, seeded") {
     // 500 rows at weight 10, 500 at weight 1: P(heavy in sample) per
     // A-Res is ~10x a light row's; at k=200 the heavy share
